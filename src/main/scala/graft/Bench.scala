@@ -309,8 +309,10 @@ object Bench {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(s =>
       scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    val famSubtotals = families.zip(famResults).map { case (_, rs) =>
-      f"${rs.collect { case r if r.err.isEmpty => r.best }.sum}%.3f"
+    // from the retry-merged results, as total_sec is: families are
+    // contiguous slices of `selected`, which `results` follows in order
+    val famSubtotals = families.scanLeft(0)(_ + _.size).zip(families).map { case (from, fam) =>
+      f"${results.slice(from, from + fam.size).collect { case r if r.err.isEmpty => r.best }.sum}%.3f"
     }.mkString("[", ",", "]")
     val priorCommon = results.collect {
       case r if r.err.isEmpty && priorMin.get(r.name).exists(p => p > 0 && r.best > 0) =>
@@ -320,7 +322,7 @@ object Bench {
       if (priorCommon.isEmpty) "null"
       else f"${math.exp(priorCommon.sum / priorCommon.size)}%.3f"
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","summary_line":true,"run_id":"$runId","cpus":$cpus,"sf":"$sfDir","total_sec":$total%.3f,"n":${results.size},"failed_n":${failed.size},"baseline43_sum":${baselinePresent.map(_.best).sum}%.3f,"load_index":$loadIndex%.2f,"load_shuffle_index":$loadShufIndex%.2f,"family_subtotals":$famSubtotals,"geomean_vs_prior_sidecar":$geoVsPrior,"n_prior_common":${priorCommon.size}}""")
+      f"""{"metric":"total_summary","value":$total%.3f,"unit":"sec","summary_line":true,"run_id":"$runId","cpus":$cpus,"sf":"$sfDir","total_sec":$total%.3f,"n":${results.size},"failed_n":${failed.size},"baseline43_sum":${baselinePresent.map(_.best).sum}%.3f,"load_index":$loadIndex%.2f,"load_shuffle_index":$loadShufIndex%.2f,"family_subtotals":$famSubtotals,"geomean_vs_prior_sidecar":$geoVsPrior,"n_prior_common":${priorCommon.size}}""")
     // untruncated sidecar: the driver's recorded bench tail clips the first
     // ~20 query entries, so every run also lands the full per-query JSON on
     // disk where it can be committed and ranked without estimation. The

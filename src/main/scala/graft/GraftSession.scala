@@ -7,11 +7,13 @@ import org.apache.spark.sql.SparkSession
   * /root/reference/processor/streaming_processor.py:66-88) plus the local-mode
   * essentials: shuffle partitions sized to cores (not the 200 default — on a
   * real cluster this is instead handled by AQE coalescing from a higher
-  * initial value), UTC session time zone for oracle parity.
+  * initial value), UTC session time zone for oracle parity. The core count
+  * is `SPARK_GRAFT_CPUS`, or the host's processors when that is unset.
   */
 object GraftSession {
   def build(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Large streaming state (sessions over millions of users) outgrows the
     // default in-heap HDFS-backed store; RocksDB keeps state off-heap with
     // incremental checkpoints. Opt-in here (local tests don't need it), the
@@ -43,6 +45,13 @@ object GraftSession {
       // row-explosive operators, in pre-explosion repartitions
       // (Similarity.topKCosine doctrine) — not in a session knob.
       .config("spark.ui.enabled", "false")
+      // file listing stays on the driver, however many paths: above the
+      // default threshold (32) a file-source micro-batch lists its files
+      // in a Spark job of one task per path. These sessions are always
+      // local[N], where that job runs in this JVM anyway and only takes
+      // task slots from the queries (on 4 cores, a 100-file stream batch
+      // paid 0.5-2.3 s for it per query)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SQL-facing custom functions (fvec_dot / fvec_norm); on a cluster the

@@ -95,11 +95,14 @@ private[operators] object LoopPlan {
   }
 
   /** [[pinnedParts]] from a measured row count at the checkpoint-part
-    * granularity (64 Ki rows/partition — the GraphRank.ckParts rule). */
+    * granularity (64 Ki rows/partition — the GraphRank.ckParts rule).
+    * None when that count reaches the core count: a frame that fills every
+    * core keeps the session's partitioning, even where the session runs
+    * more shuffle partitions than cores. */
   def pinnedPartsForRows(spark: SparkSession, rows: Long): Option[Int] = {
     val cores = spark.sparkContext.defaultParallelism.toLong
-    val want = ((rows.max(0L) + 65535L) / 65536L).max(1L).min(cores).toInt
-    pinnedParts(spark, want)
+    val want = ((rows.max(0L) + 65535L) / 65536L).max(1L)
+    if (want >= cores) None else pinnedParts(spark, want.toInt)
   }
 
   /** Broadcast-hint `df` iff the MEASURED size estimate fits the session's

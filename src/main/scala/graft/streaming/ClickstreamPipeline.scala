@@ -19,6 +19,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *  - the dashboard KPIs are a pure plan (no driver collect, §4 defect 3).
   *  - optional watermarked session aggregation bounds state (§4 defect 1);
   *    reference-parity unbounded mode remains the default.
+  *  - each micro-batch executes its plan once: the `Sinks` probe for an
+  *    empty batch and write from one cached copy, so no scan, parse or
+  *    state-store update runs twice per batch.
   *
   * Sources: any Kafka-shaped DataFrame works — `spark.readStream
   * .format("kafka")...` in production (offline-gated here), MemoryStream or

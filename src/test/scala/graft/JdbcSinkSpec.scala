@@ -54,6 +54,48 @@ class JdbcSinkSpec extends SparkSpec {
     assert(rows == Seq(1L -> 10.0, 2L -> 25.0, 3L -> 30.0))
   }
 
+  test("an empty batch writes nothing through any sink, and no sink leaves it cached") {
+    val sink = Sinks.Jdbc(url, "", "", dialect = Sinks.AnsiMerge)
+    val rows = Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
+    val empty = rows.limit(0)
+    def count(table: String) = query(s"SELECT count(*) FROM $table") { rs => rs.next(); rs.getLong(1) }
+    def tableExists(name: String) = {
+      val conn = DriverManager.getConnection(url)
+      try conn.getMetaData.getTables(null, null, name.toUpperCase, null).next()
+      finally conn.close()
+    }
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+
+    empty.write.mode("overwrite").jdbc(url, "empty_audit", new java.util.Properties())
+    sink.append("empty_audit")(empty, 0L)
+    assert(count("empty_audit") == 0)
+
+    val conn = DriverManager.getConnection(url)
+    try conn.createStatement().execute("CREATE TABLE empty_sessions (id BIGINT PRIMARY KEY, v DOUBLE)")
+    finally conn.close()
+    sink.upsert("empty_sessions", "id", Seq("v"))(empty, 5L)
+    assert(count("empty_sessions") == 0)
+    assert(!tableExists("empty_sessions_staging_5"), "an empty upsert must not stage")
+
+    // an empty trigger neither creates nor wipes the dashboard
+    sink.overwrite("empty_dash")(empty, 0L)
+    assert(!tableExists("empty_dash"))
+    sink.overwrite("empty_dash")(rows, 1L)
+    sink.overwrite("empty_dash")(empty, 2L)
+    assert(count("empty_dash") == 2)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty").resolve("out")
+    Sinks.parquetAppend(dir.toString)(empty, 0L)
+    assert(!java.nio.file.Files.exists(dir), "an empty batch must not write parquet")
+
+    // a write that throws still releases the batch's cache
+    intercept[java.sql.SQLException] {
+      sink.upsert("no_such_table", "id", Seq("v"))(rows, 9L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "a sink left its batch cached")
+  }
+
   test("Postgres dialect emits the reference's ON CONFLICT statement shape") {
     // Pins the untestable-offline dialect textually against the reference's
     // upsert (processor/streaming_processor.py:236-256): same column list,

@@ -72,6 +72,19 @@ class OptHelpersSpec extends SparkSpec {
       "AQE must be restored after concurrent statically blocks")
   }
 
+  test("pinnedPartsForRows never pins a frame that fills every core") {
+    // a session running more shuffle partitions than cores: a loop frame
+    // of at least one 64 Ki-row part per core keeps that parallelism
+    // rather than being pinned down to the core count
+    val cores = spark.sparkContext.defaultParallelism
+    withConf("spark.sql.shuffle.partitions", (cores * 4).toString) {
+      assert(LoopPlan.pinnedPartsForRows(spark, cores * 65536L).isEmpty)
+      assert(LoopPlan.pinnedPartsForRows(spark, cores * 8 * 65536L).isEmpty)
+      // below one part per core, the measured count is still pinned
+      if (cores > 1) assert(LoopPlan.pinnedPartsForRows(spark, 65536L).contains(1))
+    }
+  }
+
   test("broadcastIfSmall applies the thr/4 safety factor") {
     val thr = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.autoBroadcastJoinThreshold").stripSuffix("b"))

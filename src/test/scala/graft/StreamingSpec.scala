@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -129,6 +131,143 @@ class StreamingSpec extends SparkSpec {
       assert(results("dashboard") == 4) // 4 KPI rows per batch
       // hourly is append-mode: windows may be open, so no row guarantee
     } finally qs.foreach(_.stop())
+  }
+
+  /** Polls `cond` until it holds or `timeoutMs` passes; returns whether
+    * it held (micro-batch progress and no-data batches land
+    * asynchronously to `processAllAvailable`). */
+  private def await(timeoutMs: Long = 30000L)(cond: => Boolean): Boolean = {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    cond
+  }
+
+  test("real sinks run each micro-batch once: session state rows equal the sessions offered") {
+    // every sink skips empty batches; a probe that re-executed the batch
+    // plan ran the stateful operator twice per batch and reported twice
+    // the state rows (and read every source twice)
+    implicit val sq = spark.sqlContext
+    val clock = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
+    val wire = new EventGenerator(seed = 5).asWire(spark, 600)
+      .withColumn("timestamp", lit(clock)).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getAs[java.sql.Timestamp](2))).toSeq
+    val offered = Parse.parse(wire.toDF("key", "value", "timestamp"))
+    val sessionsOffered = offered.select("session_id").distinct().count()
+    val mem = MemoryStream[(String, String, java.sql.Timestamp)]
+    mem.addData(wire)
+
+    val url = "jdbc:derby:memory:graft_pipeline;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute(
+      """CREATE TABLE sessions (
+        |  session_id VARCHAR(64) PRIMARY KEY, user_id VARCHAR(64),
+        |  start_time TIMESTAMP, end_time TIMESTAMP,
+        |  total_events BIGINT, page_views BIGINT, add_to_cart_events BIGINT,
+        |  purchases BIGINT, total_purchase_amount DECIMAL(10,2),
+        |  session_duration_seconds INT, converted BOOLEAN)""".stripMargin)
+    finally conn.close()
+    val sessionCols = Seq("user_id", "start_time", "end_time", "total_events", "page_views",
+      "add_to_cart_events", "purchases", "total_purchase_amount",
+      "session_duration_seconds", "converted")
+    val jdbc = Sinks.Jdbc(url, "", "", dialect = Sinks.AnsiMerge)
+    val out = Files.createTempDirectory("graft_sinks").toString
+    val t0 = Trigger.ProcessingTime(0)
+    val qs = ClickstreamPipeline.start(mem.toDF().toDF("key", "value", "timestamp"),
+      ClickstreamPipeline.SinkSet(
+        Sinks.parquetAppend(s"$out/raw"),
+        jdbc.upsert("sessions", "session_id", sessionCols,
+          stagingColumnTypes = Some("session_id VARCHAR(64), user_id VARCHAR(64)")),
+        Sinks.parquetAppend(s"$out/hourly"),
+        jdbc.overwrite("dashboard")),
+      ClickstreamPipeline.Config(s"$out/ckpt", rawTrigger = t0, sessionTrigger = t0,
+        hourlyTrigger = t0, dashboardTrigger = t0, fixedClock = Some(clock)))
+    try {
+      qs.foreach(_.processAllAvailable())
+      val sessionsQ = qs.find(_.name == "session_metrics").get
+      def lastData = sessionsQ.recentProgress.filter(_.numInputRows > 0).lastOption
+      assert(await()(lastData.nonEmpty), "no session progress reported")
+      assert(lastData.get.stateOperators(0).numRowsTotal == sessionsOffered)
+      val landed = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = landed.createStatement().executeQuery("SELECT count(*) FROM sessions")
+        rs.next()
+        assert(rs.getLong(1) == sessionsOffered, "every session must land in the upsert sink")
+      } finally landed.close()
+      assert(spark.read.parquet(s"$out/raw").count() == offered.count())
+    } finally {
+      qs.foreach(_.stop())
+      try java.sql.DriverManager.getConnection("jdbc:derby:memory:graft_pipeline;drop=true")
+      catch { case _: java.sql.SQLException => () } // Derby reports a drop as an exception
+    }
+  }
+
+  test("an hourly batch with no output rows writes no parquet file") {
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[(String, String, java.sql.Timestamp)]
+    def ev(id: String, ts: String) = (id,
+      s"""{"event_id":"$id","user_id":"u1","event_type":"page_view","timestamp":"$ts"}""",
+      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+    val out = Files.createTempDirectory("graft_hourly").toString
+    val sink: (DataFrame, Long) => Unit = Sinks.parquetAppend(s"$out/hourly")
+    val q = Parse.hourlyAgg(Parse.parse(mem.toDF().toDF("key", "value", "timestamp")))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", s"$out/ckpt")
+      .foreachBatch(sink)
+      .start()
+    try {
+      // data batch 0 emits nothing (window open); the watermark moves to
+      // 10:10, which runs no-data batch 1 — still no window closes
+      mem.addData(ev("a", "2024-01-01T10:05:00Z"), ev("b", "2024-01-01T10:20:00Z"))
+      q.processAllAvailable()
+      assert(await()(q.recentProgress.exists(p => p.batchId == 1 && p.numInputRows == 0)),
+        "the watermark move did not run a no-data batch")
+      assert(!Files.exists(java.nio.file.Paths.get(out, "hourly")),
+        "a batch without output rows must not write")
+      // data batch 2 moves the watermark past 11:00: no-data batch 3
+      // closes the 10:00 window and writes it
+      mem.addData(ev("c", "2024-01-01T11:30:00Z"))
+      q.processAllAvailable()
+      assert(await()(q.recentProgress.exists(_.batchId == 3)),
+        "the watermark move did not run the emitting no-data batch")
+      val rows = spark.read.parquet(s"$out/hourly").select("total_events").as[Long].collect()
+      assert(rows.toSeq == Seq(2L))
+    } finally q.stop()
+  }
+
+  test("a file-source batch of more than 32 files lists them without a Spark job") {
+    val src = Files.createTempDirectory("graft_listing")
+    (0 until 40).foreach { i =>
+      Files.writeString(src.resolve(f"part-$i%03d.json"),
+        s"""{"key":"k$i","value":"v$i","timestamp":"2024-01-01T10:00:00Z"}\n""")
+    }
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val out = Files.createTempDirectory("graft_listing_out").toString
+    val rows = new java.util.concurrent.atomic.AtomicLong()
+    val sink: (DataFrame, Long) => Unit = (df, _) => { rows.addAndGet(df.count()); () }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = spark.readStream.schema("key STRING, value STRING, timestamp TIMESTAMP")
+        .json(src.toString)
+        .writeStream.option("checkpointLocation", s"$out/ckpt")
+        .foreachBatch(sink)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq == Seq(40L),
+        "the 40 files must arrive as one micro-batch")
+      // listener events arrive in order: once a marker job is seen, every
+      // job the query started has been seen too
+      spark.sparkContext.setJobDescription("listing-spec-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(await()(descriptions.contains("listing-spec-marker")))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val listing = descriptions.asScala.filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"file listing ran as Spark jobs: ${listing.mkString("; ")}")
+    assert(rows.get() == 40)
   }
 
   test("land-once mode lands raw exactly once and matches the fan-out's final session state") {

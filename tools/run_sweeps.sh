@@ -9,6 +9,10 @@
 set -u
 cd "$(dirname "$0")/.."
 
+# heap: SPARK_DRIVER_MEM when set, else half of MemTotal clamped to 2-8 GB
+# (the sizing the sbt test run uses), so a gate never asks for more memory
+# than the host has
+XMX="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null)}"
 JAVA_FLAGS=(--add-modules jdk.incubator.vector
   -Djava.io.tmpdir=/tmp
   --add-opens=java.base/java.lang=ALL-UNNAMED
@@ -18,7 +22,7 @@ JAVA_FLAGS=(--add-modules jdk.incubator.vector
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
   --add-opens=java.base/java.util.concurrent=ALL-UNNAMED
   --add-opens=java.base/sun.security.action=ALL-UNNAMED
-  -Xmx24g)
+  "-Xmx${XMX:-2g}")
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 
 run_gate() { # name sf_dir out_dir [env pairs...]
